@@ -218,11 +218,11 @@ _TRI_DF_CACHE: dict[str, DataFrame] = {}
 
 
 def _triangles_df(spark: SparkSession) -> DataFrame:
-    # memoized per session: createDataFrame mints fresh expression ids per
-    # call, so two structurally identical local-relation plans get
-    # DIFFERENT semanticHashes — returning the same DataFrame object keeps
-    # pip_join's vert_map memo (operators/pip.py) hitting across the gate
-    # queries and bench iterations instead of collecting per call
+    # memoized per session: an in-memory layer reads no files, so pip's
+    # prepared-layer memo (operators/pip.py ``_prepare``) identifies it by
+    # its plan, i.e. its RDD — returning the same DataFrame object keeps
+    # that memo hitting across the gate queries and bench iterations
+    # instead of collecting per call
     # applicationId is unique per session lifetime (a recycled python id()
     # could alias a stopped session's entry)
     key = spark.sparkContext.applicationId

@@ -269,8 +269,8 @@ def distance_to_boundary(
     from .layer_guard import check_layer_size
 
     check_layer_size(
-        polygons, what="distance_to_boundary(polygons)", size_col="xs",
-        bytes_per_item=32,  # each vertex becomes a 4-double edge row
+        polygons, what="distance_to_boundary(polygons)",
+        item_bytes={"xs": 32},  # each vertex becomes a 4-double edge row
         fallback_hint="Pre-filter the layer (e.g. by cell cover near the "
                       "points) before asking for exact boundary distance.")
     rows = polygons.select("poly_id", "xs", "ys").collect()

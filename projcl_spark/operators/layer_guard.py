@@ -38,8 +38,7 @@ def check_layer_size(
     layer: DataFrame,
     *,
     what: str,
-    size_col: str | None = None,
-    bytes_per_item: int = 16,
+    item_bytes: dict[str, int] | None = None,
     bytes_per_row: int = 64,
     max_rows: int | None = None,
     max_bytes: int | None = None,
@@ -48,9 +47,9 @@ def check_layer_size(
     """Aggregate (rows, payload bytes) of ``layer`` Spark-side and raise
     ``LayerTooLargeError`` if either cap is exceeded.
 
-    ``size_col``: an array column whose per-row element count dominates
-    the payload (e.g. polygon ``xs``); its elements are costed at
-    ``bytes_per_item`` each, plus ``bytes_per_row`` fixed per row.
+    ``item_bytes``: {array column: bytes per element} for the columns
+    whose element counts dominate the payload (e.g. polygon ``xs``),
+    summed in the same aggregate, plus ``bytes_per_row`` fixed per row.
     Returns (n_rows, est_bytes) so callers can log them.
 
     Caps default to the module-level ``MAX_LAYER_ROWS`` / ``MAX_LAYER_BYTES``
@@ -61,14 +60,12 @@ def check_layer_size(
         max_rows = MAX_LAYER_ROWS
     if max_bytes is None:
         max_bytes = MAX_LAYER_BYTES
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if size_col is not None:
-        aggs.append(F.coalesce(F.sum(F.size(size_col)),
-                               F.lit(0)).alias("items"))
-    row = layer.agg(*aggs).collect()[0]
-    n = int(row["n"])
-    items = int(row["items"]) if size_col is not None else 0
-    est = n * bytes_per_row + items * bytes_per_item
+    item_bytes = item_bytes or {}
+    row = layer.agg(F.count(F.lit(1)), *[
+        F.coalesce(F.sum(F.size(c)), F.lit(0)) for c in item_bytes]).collect()[0]
+    n = int(row[0])
+    est = n * bytes_per_row + sum(
+        int(items) * b for items, b in zip(row[1:], item_bytes.values()))
     if n > max_rows or est > max_bytes:
         raise LayerTooLargeError(
             f"{what}: layer has {n:,} rows / ~{est / 2**20:,.0f} MiB payload, "

@@ -7,9 +7,12 @@ the cross-product geodesic, ``src/projcl_run.c:654-656``).  Scale design:
    polygon layer is exploded to its covering cells and **broadcast** (small
    dim table — no shuffle of the 10^12-row point side);
 2. **refine**: exact winding-number test in a vectorized pandas UDF.  The
-   polygon vertex arrays ride along through the broadcast join, so the UDF
-   is a self-contained (lon, lat, xs, ys) → bool with no driver lookup —
-   works regardless of how AQE re-plans the join.
+   vertex table travels in the UDF's closure, so Arrow moves only
+   (lon, lat, poly_id) per candidate — works regardless of how AQE
+   re-plans the join.
+
+The closure state comes from ``_prepare``: one guarded collect per
+polygon layer, memoized by the layer's plan and file versions.
 
 The refine step is branch-free numpy over Arrow batches (the reference's
 SIMD idiom) — rows are only ever filtered, never re-ordered, so span
@@ -18,13 +21,18 @@ reassembly downstream stays deterministic.
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from ..index.cells import cell_id_col
+from .layer_guard import LayerTooLargeError, check_layer_size
 
 
 def winding_contains_np(px: np.ndarray, py: np.ndarray, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
@@ -114,80 +122,65 @@ def _pip_refine_closure(vert_map):
     return fn
 
 
-def build_vert_map(polygons: DataFrame) -> dict:
-    """Collect the polygon vertex table into the {poly_id: (xs, ys)} dict the
-    closure refine captures.  ONE bounded driver action per distinct polygon
-    layer — callers with a stable layer should build this once and pass it to
-    every ``pip_join`` call (bench loops, repeated gate queries).
-
-    Guarded: a Spark-side size aggregate runs BEFORE the collect and
-    raises ``LayerTooLargeError`` on layers over the driver envelope
-    (the r4 verdict's 100×-scale hazard) — ``pip_join`` catches it and
-    falls back to the distributed cell equi-join plan."""
-    from .layer_guard import check_layer_size
-
-    check_layer_size(
-        polygons, what="build_vert_map(polygons)", size_col="xs",
-        bytes_per_item=16,  # two float64 arrays per vertex
-        fallback_hint="Use pip_join(..., broadcast_polygons=False) — the "
-                      "cell equi-join plan never collects the layer.")
-    return {
-        int(r["poly_id"]): (np.asarray(r["xs"], dtype=np.float64),
-                            np.asarray(r["ys"], dtype=np.float64))
-        for r in polygons.select("poly_id", "xs", "ys").collect()
-    }
+# prepared layers: repeated calls over one layer (bench iterations, gate
+# queries) reuse one collect; bounded — a session touches a few layers
+_PREPARED: dict[tuple, tuple[dict, dict]] = {}
 
 
-# vert_map memo keyed by the polygon plan's semantic hash: repeated
-# pip_join calls over the same layer (each bench iteration, each gate
-# query against the fixture triangles) reuse one collect instead of one
-# per call.  Bounded (an engine session touches a handful of layers).
-# CONTRACT: the key is PLAN-based — a layer whose backing files are
-# rewritten under the same path mid-session must either pass
-# ``vert_map=build_vert_map(...)`` explicitly or call
-# ``clear_vert_cache()`` (same freshness rule Spark's own file-listing
-# cache imposes on mutated paths).
-_VERT_CACHE: dict[tuple, dict] = {}
-_VERT_CACHE_MAX = 16
-
-
-def clear_vert_cache() -> None:
-    _VERT_CACHE.clear()
-
-
-def _cached_vert_map(polygons: DataFrame) -> dict:
+def _prepare(polygons: DataFrame) -> tuple[dict, dict]:
+    """The broadcast state of a polygon layer — ``{poly_id: (xs, ys)}`` for
+    the refine closures, ``{cell_id: [poly_id, ...]}`` for the zero-join
+    anti/flag plan — from ONE collect per distinct layer.  A Spark-side
+    size aggregate runs first and raises ``LayerTooLargeError`` on layers
+    over the driver envelope (``pip_join`` then falls back to the
+    distributed cell equi-join plan)."""
     try:
-        # scope the memo to the session lifetime (applicationId): a plan
-        # built in a NEW session after files changed on disk must re-read,
-        # matching the freshness boundary of Spark's own per-session
-        # file-listing cache.  The 32-bit semanticHash alone could collide
-        # two different layers (silently serving the wrong vertex map) —
-        # pair it with a digest of the CANONICALIZED plan text (exprIds
-        # normalized).  For file-backed layers the text embeds the scanned
-        # paths, so a false hit now needs a 32-bit collision AND identical
-        # text — i.e. the same files.  For createDataFrame layers the text
-        # omits the row data (array columns also make semanticHash
-        # identity-unstable there), so re-instantiations may MISS (one
-        # extra bounded collect, r3 behavior) but a false HIT still needs
-        # the 32-bit collision on top of a same-schema text match.
-        import hashlib
-
+        # Key: the session (applicationId), the plan (semanticHash + md5
+        # of the canonicalized text, so a 32-bit collision alone cannot
+        # alias two plans) and (path, size, mtime) of every file read.  A
+        # file scan's plan text names no paths (one schema, one text), so
+        # the files tell parquet layers apart and catch in-place rewrites.
+        # In-memory layers read no files; their RDD identifies them, so
+        # re-creating one misses (one extra collect), never aliases.  Not
+        # identified: a rewrite that keeps both a file's size and mtime.
+        spark = polygons.sparkSession
+        hconf = spark.sparkContext._jsc.hadoopConfiguration()
+        files = []
+        for f in sorted(polygons.inputFiles()):
+            path = spark._jvm.org.apache.hadoop.fs.Path(f)
+            st = path.getFileSystem(hconf).getFileStatus(path)
+            files.append((f, st.getLen(), st.getModificationTime()))
         plan_text = (polygons._jdf.queryExecution().analyzed()
                      .canonicalized().toString())
-        key = (polygons.sparkSession.sparkContext.applicationId,
-               polygons.semanticHash(),
-               hashlib.md5(plan_text.encode()).hexdigest())
-    except Exception:  # plan not hashable (e.g. local-relation quirks)
-        return build_vert_map(polygons)
-    if key not in _VERT_CACHE:
-        if len(_VERT_CACHE) >= _VERT_CACHE_MAX:
-            _VERT_CACHE.clear()
-        _VERT_CACHE[key] = build_vert_map(polygons)
-    return _VERT_CACHE[key]
+        key = (spark.sparkContext.applicationId, polygons.semanticHash(),
+               hashlib.md5(plan_text.encode()).hexdigest(), tuple(files))
+    except (AttributeError, Py4JError, PySparkException):
+        key = None  # plan or files not inspectable: prepare, don't memoize
+    if key in _PREPARED:
+        return _PREPARED[key]
+    check_layer_size(
+        polygons, what="pip polygon layer",
+        item_bytes={"xs": 16,      # two float64 arrays per vertex
+                    "cells": 32},  # dict-of-lists entries cost more than int64s
+        fallback_hint="Use pip_join(..., broadcast_polygons=False) — the "
+                      "cell equi-join plan never collects the layer.")
+    vert_map: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+    cell_map: dict[int, list[int]] = {}
+    for r in polygons.select("poly_id", "xs", "ys", "cells").collect():
+        pid = int(r["poly_id"])
+        vert_map[pid] = (np.asarray(r["xs"], dtype=np.float64),
+                         np.asarray(r["ys"], dtype=np.float64))
+        for c in r["cells"]:
+            cell_map.setdefault(int(c), []).append(pid)
+    if key is not None:
+        if len(_PREPARED) >= 16:
+            _PREPARED.clear()
+        _PREPARED[key] = (vert_map, cell_map)
+    return vert_map, cell_map
 
 
 def pip_join(points: DataFrame, polygons: DataFrame, res: int = 8,
-             broadcast_polygons: bool = True, vert_map: dict | None = None) -> DataFrame:
+             broadcast_polygons: bool = True) -> DataFrame:
     """points(lon, lat, …) ⋈ polygons(poly_id, xs, ys, cells) → matched rows.
 
     ``cells`` must be the polygon's covering cell ids at ``res`` (see
@@ -204,27 +197,21 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int = 8,
     Fits an executor while cover+vertices are <~8 GB (millions of
     polygons).  Beyond that, set False: a plain cell equi-join with
     vertices riding along as columns (one shuffle of each side; AQE
-    splits skewed cells; no driver-side polygon collect).
-
-    ``vert_map``: pass a prebuilt ``build_vert_map(polygons)`` to skip the
-    per-call collect entirely; otherwise a semanticHash-keyed memo makes
-    repeated calls over the same layer collect once.
+    splits skewed cells; no driver-side polygon collect).  A layer over
+    the driver-collect envelope takes that plan automatically.
     """
-    from .layer_guard import LayerTooLargeError
-
     pts = points.withColumn("cell_id", cell_id_col(F.col("lon"), F.col("lat"), res))
     if broadcast_polygons:
-        if vert_map is None:
-            try:
-                vert_map = _cached_vert_map(polygons)
-            except LayerTooLargeError as ex:
-                # layer outgrew the driver envelope: degrade to the
-                # distributed cell equi-join plan instead of OOMing
-                import warnings
+        try:
+            vert_map, _ = _prepare(polygons)
+        except LayerTooLargeError as ex:
+            # layer outgrew the driver envelope: degrade to the
+            # distributed cell equi-join plan instead of OOMing
+            import warnings
 
-                warnings.warn(f"pip_join: {ex} — falling back to the "
-                              "cell equi-join plan", stacklevel=2)
-                broadcast_polygons = False
+            warnings.warn(f"pip_join: {ex} — falling back to the "
+                          "cell equi-join plan", stacklevel=2)
+            broadcast_polygons = False
     if broadcast_polygons:
         cover = polygons.select("poly_id", F.explode("cells").alias("cell_id"))
         cand = pts.join(F.broadcast(cover), "cell_id", how="inner")
@@ -243,47 +230,6 @@ def pip_join_bruteforce(points: DataFrame, polygons: DataFrame) -> DataFrame:
     """Oracle-grade exact PIP via full cross join (small inputs only)."""
     cand = points.crossJoin(F.broadcast(polygons.select("poly_id", "xs", "ys")))
     return cand.filter(_pip_refine("lon", "lat", "xs", "ys", "poly_id")).drop("xs", "ys")
-
-
-def build_cell_map(polygons: DataFrame) -> dict:
-    """{cell_id: [poly_id, ...]} from the layer's covering cells — the
-    other half of the broadcast state ``pip_anti_join`` captures (same
-    bounded one-collect discipline and freshness contract as
-    ``build_vert_map``)."""
-    from .layer_guard import check_layer_size
-
-    check_layer_size(
-        polygons, what="build_cell_map(polygons)", size_col="cells",
-        bytes_per_item=32,  # dict-of-lists entries cost more than raw int64s
-        fallback_hint="The closure-map plan needs the whole cover on the "
-                      "driver; for larger layers use pip_join(..., "
-                      "broadcast_polygons=False) and anti-join its output.")
-    cm: dict[int, list[int]] = {}
-    for r in polygons.select("poly_id", "cells").collect():
-        for c in r["cells"]:
-            cm.setdefault(int(c), []).append(int(r["poly_id"]))
-    return cm
-
-
-_CELL_CACHE: dict[tuple, dict] = {}
-
-
-def _cached_cell_map(polygons: DataFrame) -> dict:
-    try:
-        import hashlib
-
-        plan_text = (polygons._jdf.queryExecution().analyzed()
-                     .canonicalized().toString())
-        key = (polygons.sparkSession.sparkContext.applicationId,
-               polygons.semanticHash(),
-               hashlib.md5(plan_text.encode()).hexdigest())
-    except Exception:
-        return build_cell_map(polygons)
-    if key not in _CELL_CACHE:
-        if len(_CELL_CACHE) >= _VERT_CACHE_MAX:
-            _CELL_CACHE.clear()
-        _CELL_CACHE[key] = build_cell_map(polygons)
-    return _CELL_CACHE[key]
 
 
 def _pip_outside_closure(vert_map, cell_map, res: int):
@@ -322,9 +268,7 @@ def _pip_outside_closure(vert_map, cell_map, res: int):
     return fn
 
 
-def pip_anti_join(points: DataFrame, polygons: DataFrame, res: int = 8,
-                  vert_map: dict | None = None,
-                  cell_map: dict | None = None) -> DataFrame:
+def pip_anti_join(points: DataFrame, polygons: DataFrame, res: int = 8) -> DataFrame:
     """Points contained by NO polygon of the layer (spatial anti-join —
     coverage-gap / offshore filtering).
 
@@ -333,37 +277,29 @@ def pip_anti_join(points: DataFrame, polygons: DataFrame, res: int = 8,
     is inverted into a {cell → candidate polys} closure map and the whole
     operator becomes ONE vectorized filter over the point side — zero
     joins, zero shuffles, 16 bytes of Arrow traffic per row.  Same ≲8 GB
-    broadcast envelope and memo freshness contract as ``pip_join``.
+    broadcast envelope as ``pip_join``; a layer over the driver-collect
+    envelope raises ``LayerTooLargeError``.
     """
-    if vert_map is None:
-        vert_map = _cached_vert_map(polygons)
-    if cell_map is None:
-        cell_map = _cached_cell_map(polygons)
+    vert_map, cell_map = _prepare(polygons)
     return points.filter(
         _pip_outside_closure(vert_map, cell_map, res)("lon", "lat"))
 
 
 def pip_inside_flag(points: DataFrame, polygons: DataFrame, res: int = 8,
-                    flag_col: str = "inside",
-                    vert_map: dict | None = None,
-                    cell_map: dict | None = None) -> DataFrame:
+                    flag_col: str = "inside") -> DataFrame:
     """Append a boolean ``flag_col``: is the point inside ANY polygon of
     the layer?  Same zero-join closure plan as ``pip_anti_join`` (the
     inverted broadcast cover + winding refine as ONE vectorized map),
     but as a column instead of a filter — the building block for
     sequential consumers (geofence transition detection) that need the
     flag on EVERY row, hits and misses alike."""
-    if vert_map is None:
-        vert_map = _cached_vert_map(polygons)
-    if cell_map is None:
-        cell_map = _cached_cell_map(polygons)
+    vert_map, cell_map = _prepare(polygons)
     outside = _pip_outside_closure(vert_map, cell_map, res)
     return points.withColumn(flag_col, ~outside("lon", "lat"))
 
 
 def zonal_stats(points: DataFrame, polygons: DataFrame,
-                value_col: str = "val", res: int = 8,
-                **pip_kwargs) -> DataFrame:
+                value_col: str = "val", res: int = 8) -> DataFrame:
     """Zonal statistics: per-polygon count/sum/min/max/mean of a point
     measure (the raster-analysis classic — aggregate a field by zone;
     engine-added, no analogue in the reference's kernel list).
@@ -376,7 +312,7 @@ def zonal_stats(points: DataFrame, polygons: DataFrame,
     points.  Points inside k overlapping zones contribute to all k —
     standard zonal semantics for non-disjoint layers.
     """
-    hits = pip_join(points, polygons, res=res, **pip_kwargs)
+    hits = pip_join(points, polygons, res=res)
     return hits.groupBy("poly_id").agg(
         F.count("*").alias("n_pts"),
         F.sum(value_col).alias("val_sum"),
@@ -388,8 +324,7 @@ def zonal_stats(points: DataFrame, polygons: DataFrame,
 
 def zonal_percentiles(points: DataFrame, polygons: DataFrame,
                       value_col: str = "val", res: int = 8,
-                      ps: tuple[float, ...] = (0.25, 0.5, 0.75),
-                      **pip_kwargs) -> DataFrame:
+                      ps: tuple[float, ...] = (0.25, 0.5, 0.75)) -> DataFrame:
     """Per-polygon EXACT percentiles of a point measure — the order
     statistic ``zonal_stats``' moments can't give (median rainfall per
     watershed, p75 latency per region).
@@ -403,7 +338,7 @@ def zonal_percentiles(points: DataFrame, polygons: DataFrame,
     both interpolate at rank p·(n−1) — with integral inputs and dyadic p
     the result is bit-exact across engines.
     """
-    hits = pip_join(points, polygons, res=res, **pip_kwargs)
+    hits = pip_join(points, polygons, res=res)
     aggs = [F.count("*").alias("n_pts")] + [
         F.expr(f"percentile({value_col}, {p!r})").alias(f"p{int(p * 100)}")
         for p in ps

@@ -295,6 +295,8 @@ def test_unique_input_flags_match_default_paths(spark):
     hilbert_ranges(assume_unique=True) must return the same rows as the
     default paths on unique inputs, and the flagged plans must drop the
     de-dup aggregate."""
+    from collections import Counter
+
     from projcl_spark.index.cells import _scale
     from projcl_spark.index.hilbert import hilbert_cols, hilbert_ranges
     from projcl_spark.operators.dbscan import cell_bfs
@@ -307,20 +309,21 @@ def test_unique_input_flags_match_default_paths(spark):
     src = spark.createDataFrame(
         [(occupied[0][0] * n + occupied[0][1],)], "cell_id long")
 
-    base = {(r["cell_id"], r["hops"])
-            for r in cell_bfs(cells, res, src, max_hops=5).collect()}
-    flagged = {(r["cell_id"], r["hops"])
-               for r in cell_bfs(cells, res, src, max_hops=5,
-                                 cells_unique=True).collect()}
+    # multisets, not sets: a duplicated output row must fail the test
+    base = Counter((r["cell_id"], r["hops"])
+                   for r in cell_bfs(cells, res, src, max_hops=5).collect())
+    flagged = Counter((r["cell_id"], r["hops"])
+                      for r in cell_bfs(cells, res, src, max_hops=5,
+                                        cells_unique=True).collect())
     assert flagged == base and base
 
     grid = spark.createDataFrame(
         [(x, y) for x, y in occupied], "ix long, iy long")
     hs = hilbert_cols(grid, res)
-    r_base = {(r["range_start"], r["range_end"], r["n_cells"])
-              for r in hilbert_ranges(hs).collect()}
-    r_flag = {(r["range_start"], r["range_end"], r["n_cells"])
-              for r in hilbert_ranges(hs, assume_unique=True).collect()}
+    r_base = Counter((r["range_start"], r["range_end"], r["n_cells"])
+                     for r in hilbert_ranges(hs).collect())
+    r_flag = Counter((r["range_start"], r["range_end"], r["n_cells"])
+                     for r in hilbert_ranges(hs, assume_unique=True).collect())
     assert r_flag == r_base and r_base
     # the flagged plan must not contain the de-dup HashAggregate pair
     # (row_number's window remains; distinct would add two more

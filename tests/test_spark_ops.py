@@ -98,6 +98,56 @@ def test_pip_join_matches_bruteforce(spark):
     assert fast.count() > 0  # non-degenerate
 
 
+def _write_polygon_layer(path, seed: int, res: int = 8) -> None:
+    """A 16-polygon layer as one parquet file ``part-00000.parquet``
+    (same schema for every seed, so every layer's plan text is the same)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    layer = synth.polygon_layer_np(16, seed)
+    path.mkdir(exist_ok=True)
+    pq.write_table(pa.table({
+        "poly_id": pa.array([p["poly_id"] for p in layer], pa.int64()),
+        "xs": pa.array([p["xs"].tolist() for p in layer], pa.list_(pa.float64())),
+        "ys": pa.array([p["ys"].tolist() for p in layer], pa.list_(pa.float64())),
+        "cells": pa.array([synth.polygon_cover_cells(p, res).tolist() for p in layer],
+                          pa.list_(pa.int64())),
+    }), path / "part-00000.parquet")
+
+
+def test_pip_prepared_layer_follows_files(spark, tmp_path):
+    """The prepared-layer memo must tell apart two parquet layers with the
+    same schema, and must not serve a layer whose file was rewritten in
+    place: pip_join and pip_anti_join stay exact against brute force."""
+    from projcl_spark.operators.pip import pip_anti_join
+
+    pts = synth.geo_points(spark, 20000)
+    cols = ("doc_id", "offset", "poly_id")
+
+    def check(layer_dir):
+        polys = spark.read.parquet(f"file://{layer_dir}")
+        fast = pip_join(pts, polys, res=8).select(*cols)
+        slow = pip_join_bruteforce(pts, polys).select(*cols)
+        assert fast.exceptAll(slow).count() == 0
+        assert slow.exceptAll(fast).count() == 0
+        assert slow.count() > 0
+        return polys, slow
+
+    a, b = tmp_path / "a", tmp_path / "b"
+    _write_polygon_layer(a, seed=1)
+    _write_polygon_layer(b, seed=2)
+    check(a)
+    check(b)
+
+    _write_polygon_layer(a, seed=3)  # rewrite layer A in place
+    polys, slow = check(a)
+    key = ["doc_id", "offset"]
+    anti = pip_anti_join(pts, polys, res=8).select(*key)
+    want = pts.select(*key).exceptAll(slow.select(*key).distinct())
+    assert anti.exceptAll(want).count() == 0
+    assert want.exceptAll(anti).count() == 0
+
+
 def test_knn_matches_bruteforce(spark):
     pts = synth.geo_points(spark, N_DOCS).withColumn(
         "pid", F.concat_ws("#", "doc_id", "offset")
@@ -667,7 +717,7 @@ def test_zonal_stats_two_squares(spark):
     per-zone count/sum/min/max/mean, a point in neither zone must not
     appear, and a point inside BOTH zones of an overlapping layer
     contributes to both (standard zonal semantics)."""
-    from projcl_spark.operators.pip import clear_vert_cache, zonal_stats
+    from projcl_spark.operators.pip import zonal_stats
     from projcl_spark.sources.synth import polygon_cover_cells
 
     res = 6
@@ -687,7 +737,6 @@ def test_zonal_stats_two_squares(spark):
         [(1, 2.0, 2.0, 5.0), (2, 8.0, 9.0, 7.0), (3, 25.0, 5.0, 11.0),
          (4, 50.0, 50.0, 99.0)],
         "pt_id long, lon double, lat double, val double")
-    clear_vert_cache()
     got = {r["poly_id"]: r for r in
            zonal_stats(pts, zones, value_col="val", res=res).collect()}
     assert set(got) == {0, 1}
@@ -698,7 +747,6 @@ def test_zonal_stats_two_squares(spark):
 
     # overlapping zones: the shared point lands in both aggregates
     over = layer([(0, *sq(0.0, 0.0, 10.0)), (1, *sq(5.0, 5.0, 10.0))])
-    clear_vert_cache()
     got2 = {r["poly_id"]: r["n_pts"] for r in
             zonal_stats(pts, over, value_col="val", res=res).collect()}
     assert got2 == {0: 2, 1: 1}  # (8,9) is inside both squares
