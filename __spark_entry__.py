@@ -19,6 +19,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import threading
 from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -4669,6 +4670,9 @@ def _o_warp_datum_pipeline() -> str:
             f"AS value_e6 FROM pc")
 
 
+_STREAM_CONF_LOCK = threading.Lock()
+
+
 def _run_available_now(spark: SparkSession, sf_dir: str, kind: str,
                        n_parts: int, op) -> str:
     """Shared availableNow drain scaffold for the streaming gate queries:
@@ -4698,18 +4702,22 @@ def _run_available_now(spark: SparkSession, sf_dir: str, kind: str,
     # start.  Measured at sf0.1/local[32]: 2.8-3.1 s -> 1.9-2.1 s for
     # stream_geofence; results are partitioning-independent (the gates'
     # value oracles pin that).
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    state_parts = int(spark.conf.get(
-        "spark.projcl.stream.statePartitions",
-        str(max(spark.sparkContext.defaultParallelism // 4, 4))))
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
-    try:
-        q = (
-            op(stream).writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+    # The override is session-global: the lock keeps two concurrent drains
+    # from restoring each other's value (other session users can still see
+    # it for the length of one start()).
+    with _STREAM_CONF_LOCK:
+        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
+        state_parts = int(spark.conf.get(
+            "spark.projcl.stream.statePartitions",
+            str(max(spark.sparkContext.defaultParallelism // 4, 4))))
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
+        try:
+            q = (
+                op(stream).writeStream.format("memory").queryName(name)
+                .outputMode("append").trigger(availableNow=True).start()
+            )
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
     if not q.awaitTermination(600):
         q.stop()
         raise RuntimeError("availableNow stream did not finish in 600 s")

@@ -11,4 +11,6 @@ __version__ = "0.1.0"
 
 from .core.params import ProjectionParams  # noqa: F401
 from .core.spheroid import Spheroid  # noqa: F401
-from .session import get_spark  # noqa: F401
+from .session import get_spark, install_zip_cache  # noqa: F401
+
+install_zip_cache()

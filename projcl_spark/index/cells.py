@@ -154,8 +154,9 @@ def cell_id_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     return f"({ix} * {n} + {iy})"
 
 
-def ring_cells_col(cell_id: Column, res: int, ring: int = 1) -> Column:
-    """array<bigint> of the square ring around ``cell_id`` (pure SQL ops).
+def ring_cells_sql(cell_expr: str, res: int, ring: int = 1) -> str:
+    """array<bigint> of the square ring around the cell id ``cell_expr``,
+    as Spark SQL (higher-order functions).
 
     Used to explode query-side cells for kNN candidate pruning.  Longitude
     WRAPS (ix modulo 2^res): a query next to ±180° prunes against the
@@ -168,23 +169,20 @@ def ring_cells_col(cell_id: Column, res: int, ring: int = 1) -> Column:
     n = _scale(res)
     # exact integer decomposition (n = 2^res): float division would lose
     # precision for cell ids beyond 2^53 (res > 26)
-    ix = F.shiftright(cell_id, res)
-    iy = cell_id.bitwiseAND(F.lit(n - 1))
-    offs = F.sequence(F.lit(-ring), F.lit(ring))
-    # flatten(transform(dx, dx -> transform(dy, dy -> id))) — lon wrapped,
-    # lat border-filtered
-    arr = F.flatten(
-        F.transform(
-            offs,
-            lambda dx: F.transform(
-                offs,
-                lambda dy: F.struct(F.pmod(ix + dx, F.lit(n)).alias("x"),
-                                    (iy + dy).alias("y")),
-            ),
-        )
-    )
-    valid = F.filter(arr, lambda s: (s.y >= 0) & (s.y < n))
-    return F.array_distinct(F.transform(valid, lambda s: s.x * n + s.y))
+    ix = f"shiftright({cell_expr}, {res})"
+    iy = f"({cell_expr} & {n - 1})"
+    offs = f"sequence({-ring}, {ring})"
+    # lambda names cannot shadow a column that cell_expr references
+    xy = (f"flatten(transform({offs}, _ring_dx -> transform({offs}, _ring_dy -> "
+          f"named_struct('x', pmod({ix} + _ring_dx, {n}), 'y', {iy} + _ring_dy))))")
+    valid = f"filter({xy}, _ring_c -> _ring_c.y >= 0 AND _ring_c.y < {n})"
+    return f"array_distinct(transform({valid}, _ring_c -> _ring_c.x * {n} + _ring_c.y))"
+
+
+def ring_cells_col(cell: str, res: int, ring: int = 1) -> Column:
+    """``ring_cells_sql`` over the cell-id column named ``cell``, as one
+    parsed expression (one py4j call, not one per operator)."""
+    return F.expr(ring_cells_sql(f"`{cell}`", res, ring))
 
 
 def compact_cover(cells: DataFrame, res: int, min_res: int,

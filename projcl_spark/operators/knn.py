@@ -18,16 +18,30 @@ data density; ``knn_bruteforce`` is the oracle twin.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import EARTH_RADIUS_SPHERE, haversine_col, vincenty_udf
-from ..index.cells import cell_id_col, cell_xy_col, ring_cells_col
+from .. import oracle
+from ..functions import EARTH_RADIUS_SPHERE, vincenty_udf
+from ..index.cells import cell_id_sql, cell_xy_col, ring_cells_sql
+
+# plan building: each of these is ONE parsed SQL expression (one py4j call)
+# instead of a tree of Column operators (~10 py4j calls per operator)
+_HAVERSINE = oracle.haversine("q_lon", "q_lat", "lon", "lat", radius=EARTH_RADIUS_SPHERE)
+
+
+def _cells(res: int) -> Column:
+    return F.expr(cell_id_sql("lon", "lat", res))
+
+
+def _query_ring(res: int, ring: int) -> Column:
+    """The query point's cell ring, exploded: one row per candidate cell."""
+    return F.expr(f"explode({ring_cells_sql(cell_id_sql('q_lon', 'q_lat', res), res, ring)})")
 
 
 def _dist(metric: str, spheroid=None):
     if metric == "haversine":
-        return lambda: haversine_col(F.col("q_lon"), F.col("q_lat"), F.col("lon"), F.col("lat"))
+        return lambda: F.expr(_HAVERSINE)
     if metric == "vincenty":
         udf = vincenty_udf(spheroid) if spheroid is not None else vincenty_udf()
         return lambda: udf(F.col("q_lon"), F.col("q_lat"), F.col("lon"), F.col("lat"))
@@ -54,10 +68,8 @@ def knn_join(
     (2·ring+1)²) → equi-join points on cell_id → windowed top-k.  The big
     point side is scanned once and shuffled on cell_id only.
     """
-    q = queries.withColumn(
-        "cell_id", F.explode(ring_cells_col(cell_id_col(F.col("q_lon"), F.col("q_lat"), res), res, ring))
-    )
-    p = points.withColumn("cell_id", cell_id_col(F.col("lon"), F.col("lat"), res))
+    q = queries.withColumn("cell_id", _query_ring(res, ring))
+    p = points.withColumn("cell_id", _cells(res))
     cand = q.join(p, "cell_id", "inner").withColumn("dist_m", _dist(metric, spheroid)())
     w = Window.partitionBy(query_id).orderBy(F.col("dist_m").asc(), F.col(point_id).asc())
     return (
@@ -87,7 +99,7 @@ def _window_angle_col(q_lon, q_lat, res: int, ring: int, lat_map=None):
     falsely certify an inexact result.  ``lat_map`` must be monotone so
     "outside the geodetic window ⇒ outside the mapped window" holds.
 
-    The window WRAPS in longitude (matching ``ring_cells_col``): the edge
+    The window WRAPS in longitude (matching ``ring_cells_sql``): the edge
     margins Δλ_e = lon_hi − λq and Δλ_w = λq − lon_lo stay valid across
     the antimeridian because the haversine's longitude term sin²(Δλ/2) is
     2π-periodic and symmetric — a point just beyond the east edge at raw
@@ -297,13 +309,9 @@ def dwithin_join(
     qx = queries.withColumn("_safe", safe)
     good_q = qx.filter(F.lit(r) < F.col("_safe")).drop("_safe")
     bad_q = qx.filter(~(F.lit(r) < F.col("_safe"))).drop("_safe")
-    p = points.withColumn("cell_id", cell_id_col(F.col("lon"), F.col("lat"), res))
+    p = points.withColumn("cell_id", _cells(res))
     cand = (
-        good_q.withColumn(
-            "cell_id",
-            F.explode(ring_cells_col(
-                cell_id_col(F.col("q_lon"), F.col("q_lat"), res), res, ring)),
-        )
+        good_q.withColumn("cell_id", _query_ring(res, ring))
         .join(p, "cell_id", "inner")
         .withColumn("dist_m", _dist(metric, spheroid)())
         .filter(F.col("dist_m") <= r)

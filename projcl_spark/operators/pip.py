@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
-from ..index.cells import cell_id_col
+from ..index.cells import cell_id_sql
+from ..session import file_versions
 from .layer_guard import LayerTooLargeError, check_layer_size
 
 
@@ -144,16 +145,11 @@ def _prepare(polygons: DataFrame) -> tuple[dict, dict]:
         # re-creating one misses (one extra collect), never aliases.  Not
         # identified: a rewrite that keeps both a file's size and mtime.
         spark = polygons.sparkSession
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        files = []
-        for f in sorted(polygons.inputFiles()):
-            path = spark._jvm.org.apache.hadoop.fs.Path(f)
-            st = path.getFileSystem(hconf).getFileStatus(path)
-            files.append((f, st.getLen(), st.getModificationTime()))
         plan_text = (polygons._jdf.queryExecution().analyzed()
                      .canonicalized().toString())
         key = (spark.sparkContext.applicationId, polygons.semanticHash(),
-               hashlib.md5(plan_text.encode()).hexdigest(), tuple(files))
+               hashlib.md5(plan_text.encode()).hexdigest(),
+               file_versions(spark, polygons.inputFiles()))
     except (AttributeError, Py4JError, PySparkException):
         key = None  # plan or files not inspectable: prepare, don't memoize
     if key in _PREPARED:
@@ -200,7 +196,7 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int = 8,
     splits skewed cells; no driver-side polygon collect).  A layer over
     the driver-collect envelope takes that plan automatically.
     """
-    pts = points.withColumn("cell_id", cell_id_col(F.col("lon"), F.col("lat"), res))
+    pts = points.withColumn("cell_id", F.expr(cell_id_sql("lon", "lat", res)))
     if broadcast_polygons:
         try:
             vert_map, _ = _prepare(polygons)

@@ -67,7 +67,7 @@ def test_ring_cells_col_wraps_lon_matches_numpy(spark):
     n = 1 << res
     ids = [0, (n - 1) * n + (n - 1), (n // 2) * n + n // 2, 3, (n - 1) * n]
     df = spark.createDataFrame([(i,) for i in ids], "cell_id long").select(
-        "cell_id", C.ring_cells_col(F.col("cell_id"), res, ring=1).alias("ring")
+        "cell_id", C.ring_cells_col("cell_id", res, ring=1).alias("ring")
     )
     got = {r.cell_id: sorted(r.ring) for r in df.collect()}
     for cid in ids:

@@ -91,6 +91,60 @@ def test_spatial_sink_range_read_pushes_down(spark, tmp_path):
         "morton range must reach the parquet scan"
 
 
+def test_spatial_sink_file_skipping_matches_full_read(spark, tmp_path):
+    """The file-skipping read equals the full read + range filter (as a
+    multiset) on every populated cell, an empty cell, a cell straddling
+    files, and after the sink is overwritten and appended to."""
+    from collections import Counter
+
+    import numpy as np
+    import pandas as pd
+
+    from projcl_spark.index.cells import cell_id_np, morton_range_np
+    from projcl_spark.plans.spatial_sink import read_spatial_cell, write_spatial
+
+    def points(seed, n=4000):
+        rng = np.random.default_rng(seed)
+        return spark.createDataFrame(pd.DataFrame({
+            "pid": np.arange(n) + seed * 10**6,
+            "lon": rng.uniform(-60, 60, n), "lat": rng.uniform(-40, 80, n)}))
+
+    path = f"file://{tmp_path}/zsink"
+
+    def check(cell, cell_res):
+        lo, hi = morton_range_np(cell, cell_res, 12)
+        got = read_spatial_cell(spark, path, cell, cell_res, res=12)
+        want = spark.read.parquet(path).filter(
+            (F.col("_morton") >= lo) & (F.col("_morton") < hi))
+        assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect())), \
+            (cell, cell_res)
+        return len(got.inputFiles())
+
+    pts = points(1)
+    write_spatial(pts, path, res=12, buckets=8)
+    n_files = len(spark.read.parquet(path).inputFiles())
+    lon, lat = (np.array(c) for c in zip(*pts.select("lon", "lat").collect()))
+    populated = sorted(set(cell_id_np(lon, lat, 4).tolist()))
+    touched = [check(c, 4) for c in populated]
+    assert max(touched) < n_files, "a one-cell read must skip files"
+
+    # morton 0 (lon -180, lat -90) sorts below every file: no file to read
+    empty = int(cell_id_np(-170.0, -85.0, 4))
+    assert empty not in populated and check(empty, 4) == 0
+    assert read_spatial_cell(spark, path, empty, 4).schema == spark.read.parquet(path).schema
+
+    straddle = [c for c in range(16) if 2 <= check(c, 2) < n_files]
+    assert straddle, "no res-2 cell straddles two files"
+
+    write_spatial(points(2), path, res=12, buckets=8, mode="overwrite")
+    for c in range(16):
+        check(c, 2)
+    write_spatial(points(3), path, res=12, buckets=8, mode="append")
+    for c in range(16):
+        check(c, 2)
+    assert check(straddle[0], 2) >= 2
+
+
 def test_track_stats_reuses_key_exchange(spark):
     """Trajectory rollup: the lag window and the per-track aggregate share
     ONE hash exchange on user_id (plus the input round-robin spread) —

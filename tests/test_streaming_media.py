@@ -339,3 +339,43 @@ def test_stream_geofence_cross_batch_boundary(spark, tmp_path):
     got = sorted((r["user_id"], r["t_us"], r["direction"]) for r in
                  spark.sql(f"SELECT * FROM {name}").collect())
     assert got == want and len(got) == 2
+
+
+def test_concurrent_drains_restore_shuffle_partitions(spark):
+    """Two availableNow drains started at once on one session (the driver
+    contract's streaming scaffold lowers the session-global shuffle
+    partitions around ``start()``): both return the rows of a lone drain
+    and the session's value is restored afterwards."""
+    import os
+    import sys
+    import threading
+    from collections import Counter
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as E
+
+    def drain():
+        name = E._run_available_now(spark, SF, "stream_cells", 4, stream_cell_counts)
+        return Counter(map(tuple, spark.sql(f"SELECT * FROM {name}").collect()))
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    want = drain()   # also stages the drain's input once
+    assert want and spark.conf.get("spark.sql.shuffle.partitions") == before
+    for _ in range(2):
+        gate, got, errs = threading.Barrier(2), [], []
+
+        def run():
+            gate.wait(60)
+            try:
+                got.append(drain())
+            except Exception as ex:  # surfaced by the assert below
+                errs.append(ex)
+
+        threads = [threading.Thread(target=run) for _ in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(600)
+        assert not any(t.is_alive() for t in threads), "a drain hung"
+        assert not errs and got == [want, want]
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before

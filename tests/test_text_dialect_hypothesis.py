@@ -91,10 +91,11 @@ def _compare(name: str, s: pd.DataFrame, d: pd.DataFrame) -> list[str]:
             errs.append(f"{name}.{c}: dtype-kind drift "
                         f"(spark {a.dtype} vs duck {b.dtype})")
             continue
-        # null-aware: NaN on BOTH engines is agreement (the allowed
-        # nullable-promotion pattern), not a value mismatch
+        # null-aware: NaN/None on BOTH engines is agreement (the allowed
+        # nullable-promotion pattern), not a value mismatch — in float
+        # columns and in object columns (strings, nullable ints)
         bad = a != b
-        if "f" in kinds:
+        if kinds & set("fO"):
             bad = bad & ~(pd.isna(a) & pd.isna(b))
         if getattr(bad, "any", lambda: bad)():
             i = int(np.nonzero(np.asarray(bad))[0][0])
