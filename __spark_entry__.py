@@ -222,8 +222,8 @@ def _triangles_df(spark: SparkSession) -> DataFrame:
     # memoized per session: an in-memory layer reads no files, so pip's
     # prepared-layer memo (operators/pip.py ``_prepare``) identifies it by
     # its plan, i.e. its RDD — returning the same DataFrame object keeps
-    # that memo hitting across the gate queries and bench iterations
-    # instead of collecting per call
+    # that memo hitting across the gate queries instead of collecting per
+    # call
     # applicationId is unique per session lifetime (a recycled python id()
     # could alias a stopped session's entry)
     key = spark.sparkContext.applicationId
@@ -262,8 +262,7 @@ KNN_QUERIES = [
 ]
 # res 2 + ring 1 = a 270°×135° candidate window (≥90° margin beyond any
 # query cell edge): provably lossless for k=5 down to sf0.001's 150-customer
-# density while still exercising the cell equi-join plan.  Bench queries at
-# sf0.1 use tighter pruning (see bench.py).
+# density while still exercising the cell equi-join plan.
 KNN_K, KNN_RES, KNN_RING = 5, 2, 1
 
 # Seam/pole fixture for the wrap-aware certificate (round 4): queries
@@ -5344,21 +5343,6 @@ SELECT media_ref, {outs} FROM n"""
 # ------------------------------------------------------- text/dedup suite ---
 
 
-def _minhash_sig_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Scratch location of the minhash signature checkpoint for ``sf_dir``
-    (input+SQL-fingerprinted).  Exposed so the bench's COLD arm can delete
-    it and time the full signature build, not just the band join."""
-    import hashlib
-
-    from projcl_spark.operators.text import minhash_split_sql
-
-    sig_sql, _ = minhash_split_sql("spark")
-    sfb = os.path.basename(sf_dir.rstrip("/"))
-    tag = (_input_tag(sf_dir, "documents")
-           + hashlib.md5(sig_sql.encode()).hexdigest()[:8])
-    return _scratch_path(spark, f"projcl_mh_sig_{sfb}", tag=tag)
-
-
 def _minhash_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize the minhash signature stage once (parquet checkpoint)
     and return the LSH band-join pairs DataFrame — shared by
@@ -5371,13 +5355,18 @@ def _minhash_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature SQL itself, so a still-fresh checkpoint is REUSED across the
     two dedup queries in one run (and invalidated by either new testdata
     or a signature-algorithm change)."""
+    import hashlib
+
     from projcl_spark.operators.text import minhash_split_sql
 
     sig_sql, pairs_sql = minhash_split_sql("spark")
     spark.read.parquet(_t(sf_dir, "documents")).repartition(
         spark.sparkContext.defaultParallelism * 2
     ).createOrReplaceTempView("documents")
-    d = _minhash_sig_dir(spark, sf_dir)
+    sfb = os.path.basename(sf_dir.rstrip("/"))
+    tag = (_input_tag(sf_dir, "documents")
+           + hashlib.md5(sig_sql.encode()).hexdigest()[:8])
+    d = _scratch_path(spark, f"projcl_mh_sig_{sfb}", tag=tag)
     if not os.path.exists(os.path.join(d, "_SUCCESS")):
         # size the checkpoint's file count from the INPUT bytes, not the
         # core count: the signature build still runs at full parallelism

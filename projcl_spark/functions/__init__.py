@@ -213,20 +213,6 @@ def mercator_fwd_cols(lon, lat, params: ProjectionParams) -> tuple[Column, Colum
     return x.alias("x"), y.alias("y")
 
 
-def mercator_fwd_sql(lon: str, lat: str, params: ProjectionParams) -> tuple[str, str]:
-    """The same Mercator forward as ANSI SQL (DuckDB oracle twin)."""
-    info = params.info()
-    scale = params.scale * info.major_axis
-    x = f"({params.x0!r} + {scale!r} * radians({lon}))"
-    y_s = f"asinh(tan(radians({lat})))"
-    if info.is_spherical:
-        y = f"({params.y0!r} + {scale!r} * {y_s})"
-    else:
-        e = info.ecc
-        y = f"({params.y0!r} + {scale!r} * ({y_s} - {e!r} * atanh({e!r} * sin(radians({lat})))))"
-    return x, y
-
-
 def affine2d_cols(x, y, m: tuple[float, float, float, float, float, float]) -> tuple[Column, Column]:
     """2-D affine grid transform as pure columns.
 

@@ -68,7 +68,3 @@ def mod_pi(lam):
     """Wrap longitude (radians) to (-pi, pi]."""
     return np.where(np.abs(lam) > np.pi, lam - np.copysign(2.0 * np.pi, lam), lam)
 
-
-def cubic4(x, a, b, c, d):
-    """Catmull-Rom cubic through 4 samples (``peel.opencl:59-61``)."""
-    return b + 0.5 * x * (c - a + x * (2.0 * a - 5.0 * b + 4.0 * c - d + x * (3.0 * (b - c) + d - a)))

@@ -12,7 +12,11 @@ from pyspark.sql import functions as F
 from projcl_spark.plans.checkpoint import Pipeline
 
 
-def _build(spark, root, run_id, counter):
+class _Injected(RuntimeError):
+    """The failure a fault-injection test raises on purpose."""
+
+
+def _build(spark, root, run_id, counter, fail_in_fn=False):
     p = Pipeline(spark, root, run_id)
 
     def s1():
@@ -23,6 +27,8 @@ def _build(spark, root, run_id, counter):
 
     def s2(df):
         counter["s2"] += 1
+        if fail_in_fn:
+            raise _Injected("agg fn")
         return df.groupBy("k").agg(F.count("*").alias("n"))
 
     def s3(df):
@@ -68,6 +74,58 @@ def test_pipeline_resumes_mid_run(spark, tmp_path):
     assert out.first()["total"] == 1000
     assert p2.resumed == ["gen", "agg"] and p2.ran == ["total"]
     assert counter == {"s1": 1, "s2": 1, "s3": 1}
+
+
+def _inject(monkeypatch, point):
+    """Arm one failure in the middle stage ("agg") after its ``fn`` ran: in
+    its ``_lineage`` write (data already written) or in its ``_OK`` rename
+    (``_lineage`` already written).  A failure in ``fn`` itself needs no
+    patch: ``_build(fail_in_fn=True)`` raises there."""
+    if point == "lineage_write":
+        write = Pipeline._write
+
+        def failing_write(self, df, path):
+            if path == os.path.join(self._dir("agg"), "_lineage"):
+                raise _Injected(point)
+            write(self, df, path)
+
+        monkeypatch.setattr(Pipeline, "_write", failing_write)
+    elif point == "ok_rename":
+        replace = os.replace
+
+        def failing_replace(src, dst):
+            if dst.endswith(os.path.join("agg", "_OK")):
+                raise _Injected(point)
+            replace(src, dst)
+
+        monkeypatch.setattr(os, "replace", failing_replace)
+
+
+@pytest.mark.parametrize("point", ["fn", "lineage_write", "ok_rename"])
+def test_pipeline_resumes_after_failure(spark, tmp_path, monkeypatch, point):
+    """A failure anywhere in a stage before its ``_OK`` commit leaves the
+    stage uncommitted: a fresh Pipeline on the same run id serves the
+    committed stage from its checkpoint, re-runs exactly the failed stage
+    and those after it, and every stage's lineage counts its data rows."""
+    root, run_id = str(tmp_path), f"run-{uuid.uuid4().hex[:8]}"
+    counter = {"s1": 0, "s2": 0, "s3": 0}
+
+    with monkeypatch.context() as m:
+        _inject(m, point)
+        with pytest.raises(_Injected):
+            _build(spark, root, run_id, counter, fail_in_fn=point == "fn")
+    assert counter == {"s1": 1, "s2": 1, "s3": 0}
+
+    p, out = _build(spark, root, run_id, counter)
+    assert out.first()["total"] == 1000
+    assert p.resumed == ["gen"] and p.ran == ["agg", "total"]
+    assert counter == {"s1": 1, "s2": 2, "s3": 1}
+
+    lin = {r["stage"]: r["n"] for r in p.lineage().groupBy("stage")
+           .agg(F.sum("n_rows").alias("n")).collect()}
+    data = {s: spark.read.parquet(os.path.join(root, run_id, s, "data")).count()
+            for s in ("gen", "agg", "total")}
+    assert lin == data == {"gen": 1000, "agg": 7, "total": 1}
 
 
 def test_lineage_and_metrics(spark, tmp_path):
