@@ -4954,9 +4954,9 @@ FROM r WHERE rnk <= {ANN_K}"""
 
 def q_checkpoint_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpoint/lineage sink, VALUE-checked: run a 2-stage Pipeline
-    (filter → aggregate over documents), then read back the per-stage
-    lineage rows the sink wrote and emit per-stage row counts.  The oracle
-    recomputes what each stage MUST have written — audits the sink's
+    (filter → aggregate over documents), then sum the per-file row counts
+    each stage's commit marker recorded into per-stage row counts.  The
+    oracle recomputes what each stage MUST have written — audits the sink's
     row-count records, not just that files appeared.  Deterministic across
     re-runs: a pre-existing checkpoint resumes and serves the same lineage."""
     from projcl_spark.plans.checkpoint import Pipeline

@@ -194,25 +194,6 @@ def haversine_col(lon1, lat1, lon2, lat2, radius: float = EARTH_RADIUS_SPHERE) -
     return F.lit(2.0 * radius) * F.asin(F.sqrt(F.least(F.greatest(h, F.lit(0.0)), F.lit(1.0))))
 
 
-def mercator_fwd_cols(lon, lat, params: ProjectionParams) -> tuple[Column, Column]:
-    """Spherical/ellipsoidal Mercator forward as pure columns (no UDF).
-
-    The one projection simple enough that staying JVM-side always wins; used
-    by the hot tiling path.  Matches ``pl_project_mercator_[se]`` exactly.
-    """
-    info = params.info()
-    scale = params.scale * info.major_axis
-    x = F.lit(params.x0) + F.lit(scale) * F.radians(lon)
-    phi = F.radians(lat)
-    y_s = F.asinh(F.tan(phi))
-    if info.is_spherical:
-        y = F.lit(params.y0) + F.lit(scale) * y_s
-    else:
-        e = info.ecc
-        y = F.lit(params.y0) + F.lit(scale) * (y_s - F.lit(e) * F.atanh(F.lit(e) * F.sin(phi)))
-    return x.alias("x"), y.alias("y")
-
-
 def affine2d_cols(x, y, m: tuple[float, float, float, float, float, float]) -> tuple[Column, Column]:
     """2-D affine grid transform as pure columns.
 

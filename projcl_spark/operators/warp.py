@@ -159,6 +159,13 @@ def sample_tiles(
       kernel/pl_sample_nearest.opencl:2-18).  Implemented as a LEFT join
       (missing tile ⇒ null ⇒ 0) plus an in-image gate, so every
       destination pixel still emits a row.
+
+    Sparse mosaics (``tiles`` lacks some (tile_row, tile_col) of the
+    grid): a tap in a missing tile adds 0.  A destination pixel whose
+    EVERY tap misses is path-dependent: the broadcast nearest/bilinear
+    gather (``broadcast_tiles=True``) emits it with value 0; bicubic,
+    quasi-bicubic and ``broadcast_tiles=False`` drop its row under
+    ``border="clamp"`` and emit 0 under ``border="zero"``.
     """
     if filter not in FILTERS:
         raise ValueError(f"unknown filter {filter!r}; have {FILTERS}")
@@ -206,12 +213,8 @@ def sample_tiles(
         # weighted sum folds in ONE projection.  Taps are summed in the
         # same k-order the explode emitted them and each term is the
         # same w·v product, so the doubles are bit-identical to the
-        # former partial-aggregate path.  A tap whose tile row is absent
-        # from a sparse mosaic contributes 0 (the former inner join
-        # dropped that tap row — same sum); only a pixel with EVERY tap
-        # missing differs (kept at 0 here, formerly dropped) — the
-        # full-mosaic contract of every gate/test.  Bicubic (16 taps =
-        # 16 broadcast builds) keeps the explode path below.
+        # explode path below, which bicubic (16 taps = 16 broadcast
+        # builds) keeps.
         cur = grid
         terms: list[list[Column]] = [[] for _ in range(n_ch)]
         for k, (px, py, w) in enumerate(tap_tuples):

@@ -1,4 +1,4 @@
-"""Stage-level checkpointing with per-partition lineage + metrics (north
+"""Stage-level checkpointing with per-file row counts + metrics (north
 rule: every pipeline stage checkpoints so runs resume mid-pipeline).
 
 The reference has no persistence at all (its "sink" is a blocking device
@@ -11,16 +11,15 @@ Layout (table-format-agnostic: parquet dirs in the sandbox; pass
 on a cluster with the iceberg-spark runtime — ``tests/test_checkpoint.py::
 test_iceberg_seam`` drives that path, skip-marked where the jar is absent):
 
-    {root}/{run_id}/{stage}/data/        stage output (parquet)
-    {root}/{run_id}/{stage}/_lineage/    per-partition rows:
-        (run_id, stage, partition_id, n_rows, wall_ms, inputs, finished_at)
-    {root}/{run_id}/{stage}/_OK          commit marker (atomic rename)
+    {root}/{run_id}/{stage}/data/   stage output (parquet)
+    {root}/{run_id}/{stage}/_OK     commit marker (atomic rename), JSON
+        {"stage", "wall_ms", "inputs", "finished_at", "rows": [n_file0, ...]}
 
-Resume contract: a stage re-runs iff its ``_OK`` marker is absent; finished
-stages are served from their checkpoint, so a driver crash between stages
-loses at most the in-flight stage.  Lineage rows are computed from the data
-actually written (count per ``spark_partition_id``), not from what the
-planner intended — they double as row-count audit records.
+Resume contract: a stage re-runs iff it has no ``_OK`` marker with
+``rows``; finished stages are served from their checkpoint, so a driver
+crash between stages loses at most the in-flight stage.  ``rows`` counts
+the rows of each data file (sorted path order) from table metadata after
+the write — what was written, not what the planner intended.
 """
 
 from __future__ import annotations
@@ -29,9 +28,11 @@ import json
 import os
 import time
 from collections.abc import Callable
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..session import file_versions, parquet_footer
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -89,8 +90,18 @@ class Pipeline:
     def _ok(self, stage: str) -> str:
         return os.path.join(self._dir(stage), "_OK")
 
+    def _marker(self, stage: str) -> dict | None:
+        """The stage's commit record, or None while it is uncommitted (a
+        marker from before per-file counts has no ``rows``: re-run it)."""
+        try:
+            with open(self._ok(stage)) as f:
+                meta = json.load(f)
+        except FileNotFoundError:
+            return None
+        return meta if "rows" in meta else None
+
     def is_done(self, stage: str) -> bool:
-        return os.path.exists(self._ok(stage))
+        return self._marker(stage) is not None
 
     def _table(self, path: str) -> str:
         """Map a checkpoint path to an Iceberg table identifier."""
@@ -101,7 +112,7 @@ class Pipeline:
     @staticmethod
     def _fs_url(path: str) -> str:
         """Parquet data must land on the same mounted filesystem the
-        os-level ``_OK``/lineage checks inspect — qualify with file: so a
+        os-level ``_OK`` checks inspect — qualify with file: so a
         cluster whose fs.defaultFS is an object store can't silently
         split the two."""
         return path if "://" in path else f"file://{path}"
@@ -116,6 +127,16 @@ class Pipeline:
         if self.table_format == "iceberg":
             return self.spark.read.table(self._table(path))
         return self.spark.read.parquet(self._fs_url(path))
+
+    def _file_rows(self, path: str) -> list[int]:
+        """Rows of each data file written at ``path``, in sorted path order,
+        from table metadata: no data is read."""
+        if self.table_format == "iceberg":
+            files = self.spark.read.table(self._table(path) + ".files")
+            return [r.record_count for r in
+                    files.orderBy("file_path").select("record_count").collect()]
+        return [sum(b.getRowCount() for b in parquet_footer(self.spark, f).getBlocks())
+                for f, *_ in file_versions(self.spark, [self._fs_url(path)])]
 
     # ------------------------------------------------------------ stages ---
 
@@ -146,64 +167,34 @@ class Pipeline:
         self._write(out, data_path)
         wall_ms = int((time.time() - t0) * 1000)
 
-        # lineage from what was actually written
-        written = self._read(data_path)
-        lineage = (
-            written.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("n_rows"))
-            .select(
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(name).alias("stage"),
-                "partition_id",
-                "n_rows",
-                F.lit(wall_ms).alias("wall_ms"),
-                F.lit(",".join(inputs)).alias("inputs"),
-                F.current_timestamp().alias("finished_at"),
-            )
-        )
-        self._write(lineage, os.path.join(self._dir(name), "_lineage"))
+        rows = self._file_rows(data_path)
         # atomic commit: write-then-rename so a crash mid-write can never
         # leave a marker that is_done() would trust
         os.makedirs(self._dir(name), exist_ok=True)  # iceberg mode: no parquet dir
         tmp = self._ok(name) + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"stage": name, "wall_ms": wall_ms,
-                       "inputs": list(inputs)}, f)
+            json.dump({"stage": name, "wall_ms": wall_ms, "inputs": list(inputs),
+                       "finished_at": datetime.now(timezone.utc).isoformat(),
+                       "rows": rows}, f)
         os.replace(tmp, self._ok(name))
         self.ran.append(name)
-        return written
+        return self._read(data_path)
 
     # ----------------------------------------------------------- queries ---
 
     def lineage(self) -> DataFrame:
-        """All lineage rows of this run (every committed stage)."""
-        paths = [
-            os.path.join(self._dir(s), "_lineage")
-            for s in self._stages
-            if self.is_done(s)
-        ]
-        if not paths:  # inspecting a run that crashed before any commit
-            return self.spark.createDataFrame(
-                [], "run_id string, stage string, partition_id int, "
-                    "n_rows long, wall_ms int, inputs string, "
-                    "finished_at timestamp")
-        dfs = [self._read(p) for p in paths]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionAll(d)
-        return out
+        """One row per data file of every committed stage, built from the
+        commit markers (no Spark job runs).  ``partition_id`` is the file's
+        ordinal in sorted path order; ``n_rows`` the rows it holds."""
+        rows = [(self.run_id, s, i, n, m["wall_ms"], ",".join(m["inputs"]),
+                 datetime.fromisoformat(m["finished_at"]))
+                for s in self._stages if (m := self._marker(s))
+                for i, n in enumerate(m["rows"])]
+        return self.spark.createDataFrame(
+            rows, "run_id string, stage string, partition_id int, n_rows long, "
+                  "wall_ms int, inputs string, finished_at timestamp")
 
     def metrics(self) -> dict:
-        """Per-stage wall/row metrics from the commit markers + lineage."""
-        out = {}
-        for s in self._stages:
-            if not self.is_done(s):
-                continue
-            with open(self._ok(s)) as f:
-                meta = json.load(f)
-            n = self._read(os.path.join(self._dir(s), "_lineage")).agg(
-                F.sum("n_rows")
-            ).first()[0]
-            out[s] = {"wall_ms": meta["wall_ms"], "n_rows": int(n or 0),
-                      "inputs": meta["inputs"]}
-        return out
+        """Per-stage wall/row metrics from the commit markers."""
+        return {s: {"wall_ms": m["wall_ms"], "n_rows": sum(m["rows"]), "inputs": m["inputs"]}
+                for s in self._stages if (m := self._marker(s))}

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..index.cells import morton_col, morton_range_np
-from ..session import file_versions
+from ..session import file_versions, parquet_footer
 
 MORTON_COL = "_morton"
 
@@ -75,11 +75,8 @@ _SINKS: dict[tuple, tuple[StructType, list | None]] = {}
 def _morton_bounds(spark: SparkSession, file: str) -> tuple[int | None, int | None]:
     """[min, max] of ``_morton`` over a parquet file's row groups, from its
     footer; ``(None, None)`` when a row group carries no statistics."""
-    jvm = spark._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
     try:
-        footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-            hconf, jvm.org.apache.hadoop.fs.Path(file))
+        footer = parquet_footer(spark, file)
         idx = footer.getFileMetaData().getSchema().getFieldIndex(MORTON_COL)
         lo = hi = None
         for block in footer.getBlocks():

@@ -8,8 +8,8 @@ batch sizes (10⁴–10⁵ points per call).
 
 Also process-level plumbing every session shares: the zip-directory cache
 that keeps a Python worker's per-task ``importlib.invalidate_caches()``
-cheap, and ``file_versions``, the file listing that memo keys are built
-from.
+cheap, ``file_versions``, the file listing that memo keys are built
+from, and ``parquet_footer``, the one place a parquet footer is opened.
 """
 
 from __future__ import annotations
@@ -86,7 +86,8 @@ def file_versions(spark: SparkSession, paths) -> tuple[tuple[str, int, int, bool
     sees: a file stands for itself, a directory for its direct children,
     without the ``_``/``.``-prefixed names Spark's file index skips.  One
     Hadoop listing per path (any filesystem Spark reads); the memo keys of
-    ``pip._prepare`` and the spatial sink are built from it."""
+    ``pip._prepare`` and the spatial sink, and a checkpoint commit's list of
+    data files, are built from it."""
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     Path = spark._jvm.org.apache.hadoop.fs.Path
     out = []
@@ -97,6 +98,17 @@ def file_versions(spark: SparkSession, paths) -> tuple[tuple[str, int, int, bool
             if not f.rsplit("/", 1)[-1].startswith(("_", ".")):
                 out.append((f, st.getLen(), st.getModificationTime(), st.isDirectory()))
     return tuple(sorted(out))
+
+
+def parquet_footer(spark: SparkSession, file: str):
+    """The footer (Java ``ParquetMetadata``) of one parquet data file, read
+    on the driver through Hadoop (any filesystem Spark reads): its row
+    groups are ``getBlocks()``, each with ``getRowCount()`` and per-column
+    statistics.  Metadata only; no Spark job runs."""
+    jvm = spark._jvm
+    return jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        spark.sparkContext._jsc.hadoopConfiguration(),
+        jvm.org.apache.hadoop.fs.Path(file))
 
 
 def get_spark(

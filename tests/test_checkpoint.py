@@ -1,8 +1,9 @@
 """Checkpoint/lineage pipeline tests: resume-from-checkpoint semantics,
-per-partition lineage rows, metrics — the north rule's persistence story."""
+per-file lineage rows, metrics — the north rule's persistence story."""
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
@@ -77,19 +78,19 @@ def test_pipeline_resumes_mid_run(spark, tmp_path):
 
 
 def _inject(monkeypatch, point):
-    """Arm one failure in the middle stage ("agg") after its ``fn`` ran: in
-    its ``_lineage`` write (data already written) or in its ``_OK`` rename
-    (``_lineage`` already written).  A failure in ``fn`` itself needs no
-    patch: ``_build(fail_in_fn=True)`` raises there."""
-    if point == "lineage_write":
+    """Arm one failure in the middle stage ("agg") after its ``fn`` ran:
+    right after its data write (data on disk, no marker) or in its ``_OK``
+    rename.  A failure in ``fn`` itself needs no patch:
+    ``_build(fail_in_fn=True)`` raises there."""
+    if point == "after_data_write":
         write = Pipeline._write
 
-        def failing_write(self, df, path):
-            if path == os.path.join(self._dir("agg"), "_lineage"):
-                raise _Injected(point)
+        def write_then_fail(self, df, path):
             write(self, df, path)
+            if path == os.path.join(self._dir("agg"), "data"):
+                raise _Injected(point)
 
-        monkeypatch.setattr(Pipeline, "_write", failing_write)
+        monkeypatch.setattr(Pipeline, "_write", write_then_fail)
     elif point == "ok_rename":
         replace = os.replace
 
@@ -101,7 +102,7 @@ def _inject(monkeypatch, point):
         monkeypatch.setattr(os, "replace", failing_replace)
 
 
-@pytest.mark.parametrize("point", ["fn", "lineage_write", "ok_rename"])
+@pytest.mark.parametrize("point", ["fn", "after_data_write", "ok_rename"])
 def test_pipeline_resumes_after_failure(spark, tmp_path, monkeypatch, point):
     """A failure anywhere in a stage before its ``_OK`` commit leaves the
     stage uncommitted: a fresh Pipeline on the same run id serves the
@@ -128,22 +129,62 @@ def test_pipeline_resumes_after_failure(spark, tmp_path, monkeypatch, point):
     assert lin == data == {"gen": 1000, "agg": 7, "total": 1}
 
 
+def _rows_per_file(spark, data_dir):
+    """Rows of each data file under ``data_dir`` in sorted name order,
+    counted by reading the data."""
+    names = sorted(f for f in os.listdir(data_dir) if not f.startswith(("_", ".")))
+    by_file = {os.path.basename(f): n for f, n in spark.read.parquet(data_dir)
+               .groupBy(F.input_file_name()).count().collect()}
+    return [by_file.get(f, 0) for f in names]
+
+
 def test_lineage_and_metrics(spark, tmp_path):
     root, run_id = str(tmp_path), f"run-{uuid.uuid4().hex[:8]}"
     counter = {"s1": 0, "s2": 0, "s3": 0}
     p, _ = _build(spark, root, run_id, counter)
 
-    lin = p.lineage().toPandas()
+    sc = spark.sparkContext
+    group = f"ckpt-meta-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "metrics and lineage read the markers only")
+    try:
+        m = p.metrics()
+        lin_df = p.lineage()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    lin = lin_df.toPandas()
     assert set(lin.columns) == {"run_id", "stage", "partition_id", "n_rows",
                                 "wall_ms", "inputs", "finished_at"}
     assert set(lin["stage"]) == {"gen", "agg", "total"}
     assert lin[lin.stage == "gen"]["n_rows"].sum() == 1000
     assert lin[lin.stage == "total"]["n_rows"].sum() == 1
+    for stage in ("gen", "agg", "total"):
+        data_dir = os.path.join(root, run_id, stage, "data")
+        got = lin[lin.stage == stage].sort_values("partition_id")
+        assert list(got["partition_id"]) == list(range(len(got)))
+        assert list(got["n_rows"]) == _rows_per_file(spark, data_dir)
+        assert m[stage]["n_rows"] == spark.read.parquet(data_dir).count()
 
-    m = p.metrics()
     assert m["gen"]["n_rows"] == 1000
     assert m["agg"]["inputs"] == ["gen"]
     assert all(v["wall_ms"] >= 0 for v in m.values())
+
+
+def test_marker_without_rows_reruns(spark, tmp_path):
+    """A ``_OK`` marker written before per-file counts (no ``rows``) is not
+    a commit: the stage re-runs and its metrics count what it wrote."""
+    root, run_id = str(tmp_path), f"run-{uuid.uuid4().hex[:8]}"
+    os.makedirs(os.path.join(root, run_id, "gen"))
+    with open(os.path.join(root, run_id, "gen", "_OK"), "w") as f:
+        json.dump({"stage": "gen", "wall_ms": 280, "inputs": []}, f)
+    counter = {"s1": 0, "s2": 0, "s3": 0}
+
+    p, out = _build(spark, root, run_id, counter)
+    assert out.first()["total"] == 1000
+    assert p.ran == ["gen", "agg", "total"] and not p.resumed
+    assert p.metrics()["gen"]["n_rows"] == 1000
 
 
 def test_duplicate_stage_rejected(spark, tmp_path):

@@ -13,7 +13,6 @@ from projcl_spark.core.params import ProjectionParams
 from projcl_spark.core.spheroid import Spheroid
 from projcl_spark.functions import (
     haversine_col,
-    mercator_fwd_cols,
     project_udf,
 )
 from projcl_spark.geo import datum as dt
@@ -65,16 +64,6 @@ def test_project_udf_matches_numpy(spark):
     ex, ey = fwd(got["lon"].to_numpy(), got["lat"].to_numpy())
     np.testing.assert_allclose(got["x"].to_numpy(), ex, rtol=1e-12)
     np.testing.assert_allclose(got["y"].to_numpy(), ey, rtol=1e-12)
-
-
-def test_mercator_pure_columns_match_udf(spark):
-    pts = synth.geo_points(spark, N_DOCS)
-    params = ProjectionParams(spheroid=Spheroid.WGS_84)
-    x, y = mercator_fwd_cols(F.col("lon"), F.col("lat"), params)
-    udf = project_udf("mercator", params)
-    df = pts.select(x, y, udf("lon", "lat").alias("xy")).toPandas()
-    np.testing.assert_allclose(df["x"], [r["x"] for r in df["xy"]], rtol=1e-12)
-    np.testing.assert_allclose(df["y"], [r["y"] for r in df["xy"]], rtol=1e-12)
 
 
 def test_haversine_col_matches_numpy(spark):

@@ -78,6 +78,30 @@ def test_bicubic_reproduces_at_nodes(spark):
     assert abs(out["value"][0] - expect) < 1e-9
 
 
+def test_sparse_mosaic_pixel_with_every_tap_missing(spark):
+    """Pins the documented sparse-mosaic behaviour of ``sample_tiles``: a
+    pixel whose every tap lands in an absent tile is emitted as 0 by the
+    broadcast nearest/bilinear gather and dropped by the explode path
+    (bicubic, or ``broadcast_tiles=False``) under ``border="clamp"``."""
+    tiles = tiles_df(spark, 2, 2, 8, 8).filter(
+        ~((F.col("tile_row") == 0) & (F.col("tile_col") == 1)))
+    # (0, 0) lies in tile (0, 0); every tap of (0, 1), bicubic's 4x4
+    # included, lies in the missing tile (0, 1)
+    g = spark.createDataFrame([(0, 0, 3.5, 3.5), (0, 1, 11.5, 3.5)],
+                              "gi int, gj int, x double, y double")
+
+    def run(**kw):
+        out = sample_tiles(g, tiles, 8, 8, 2, 2, **kw).collect()
+        return {(r.gi, r.gj): r.value for r in out}
+
+    for filt in ("nearest", "bilinear"):
+        emitted = run(filter=filt)
+        assert set(emitted) == {(0, 0), (0, 1)} and emitted[(0, 1)] == 0.0
+        assert set(run(filter=filt, broadcast_tiles=False)) == {(0, 0)}
+    assert set(run(filter="bicubic")) == {(0, 0)}
+    assert run(filter="bicubic", border="zero")[(0, 1)] == 0.0
+
+
 def test_assemble_tiles_identity_roundtrip(spark):
     """tiles → nearest-sample at integer coords → assemble_tiles == source
     (raster→vector→raster identity)."""
